@@ -4,10 +4,20 @@ Strategy (Iceberg-snapshot analog on plain parquet): the corpus is split into
 B deterministic buckets by ``pmod(hash(doc_id), B)``. The job processes
 buckets in groups; each group's output lands under ``out/bucket=<b>/`` and a
 manifest row (job_id, bucket, n_docs, n_spans, n_chunks, wall_ms, commit_seq)
-is appended ATOMICALLY AFTER the data (temp-dir rename — the parquet fallback
-for an Iceberg snapshot commit). On restart, completed buckets are read from
-the manifest and anti-joined away, so a killed job resumes without
-recomputing finished work.
+is appended ATOMICALLY AFTER the data: the driver serializes the group's rows
+into one parquet file in memory, writes it to a temp file beside the manifest
+and renames it into ``_manifest/`` through the Hadoop FileSystem API (the
+parquet fallback for an Iceberg snapshot commit). On restart, completed
+buckets are read from the manifest and anti-joined away, so a killed job
+resumes without recomputing finished work.
+
+The commit log never starts a Spark job: manifest appends, the recorded run
+params and the resume read are a handful of driver-side FileSystem calls
+(a one-row ``createDataFrame`` write is a whole Python-backed Spark job of
+~1 s on the critical path of every group). Output dirs whose manifest and
+params were written by Spark (part files with ``.crc`` sidecars, a JSON
+``part-*.json`` with ``_SUCCESS``) resume unchanged, and Spark reads the
+driver-written manifest like any other parquet dir.
 
 Reference analog: the per-run metadata.json / trace ledger and
 dropped-chunk/retention accounting (pipeline/orchestrator.py:133-232,
@@ -16,14 +26,25 @@ dense/orchestrator.py:2010-2070) — here promoted to a real commit log.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkdoc.schemas import METRICS
+
+#: ``schemas.METRICS`` as Arrow: same names, widths and nullability, so a
+#: driver-written manifest file reads back through ``spark.read`` (with or
+#: without the explicit schema) exactly like a Spark-written one
+_ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64(), "string": pa.string()}
+_MANIFEST_ARROW = pa.schema(
+    [pa.field(f.name, _ARROW_TYPES[f.dataType.simpleString()], f.nullable) for f in METRICS]
+)
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame:
@@ -34,28 +55,96 @@ def manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Bucket numbers with committed manifest rows. Absence of the manifest
-    means a fresh run (empty set); a manifest that EXISTS but cannot be read
-    raises — treating a transient storage error as "nothing committed" would
-    re-process committed buckets (and, worse, let _check_or_record_params
-    overwrite the recorded partitioning params)."""
-    from sparkdoc.io import fs_exists
-
-    path = manifest_path(out_dir)
-    if not fs_exists(spark, path):
-        return set()
-    rows = spark.read.schema(METRICS).parquet(path).select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
-
-
 def _hadoop_fs(spark: SparkSession, path_str: str):
     """(FileSystem, Path) for ``path_str`` via the JVM Hadoop API — resolves
     the scheme (file://, hdfs://, s3a://…), so the commit log works on the
-    same storage the data lands on, not just the driver's local disk."""
-    from sparkdoc.io import hadoop_fs
+    same storage the data lands on, not just the driver's local disk. The
+    RAW filesystem: commit-log files carry no ``.crc`` sidecar (Spark reads
+    a sidecar-less file unverified, and the sidecars of Spark-written
+    manifests are simply never opened)."""
+    from sparkdoc.io import _text_fs, hadoop_fs
 
-    return hadoop_fs(spark, path_str)
+    fs, p = hadoop_fs(spark, path_str)
+    return _text_fs(fs), p
+
+
+def _visible_files(fs, dir_p, suffix: str) -> list:
+    """The files of ``dir_p`` ending in ``suffix`` that Spark's readers see
+    (no ``_``/``.`` prefix: ``_SUCCESS``, ``.crc`` sidecars and temp files
+    are skipped), sorted by name; empty when ``dir_p`` is absent."""
+    if not fs.exists(dir_p):
+        return []
+    out = []
+    for st in fs.listStatus(dir_p):
+        name = st.getPath().getName()
+        if name.endswith(suffix) and not name.startswith(("_", ".")):
+            out.append(st.getPath())
+    return sorted(out, key=lambda p: p.getName())
+
+
+def _commit_file(fs, data: bytes, tmp_p, target_p) -> None:
+    """Write ``data`` to ``tmp_p``, then RENAME it to ``target_p`` (atomic on
+    POSIX and HDFS; on S3 the rename is copy+delete but readers key on whole
+    files). The temp file lives OUTSIDE the target's directory, so a kill
+    between create and rename leaves nothing there."""
+    from sparkdoc.io import write_fs_bytes
+
+    write_fs_bytes(fs, tmp_p, data)
+    fs.mkdirs(target_p.getParent())
+    # Hadoop rename reports failure by RETURNING FALSE, not raising —
+    # swallowing it would mark the commit done while the file is lost
+    # (resume would recompute a bucket the summary claimed committed, and
+    # the ledger accounting would be silently wrong)
+    if not fs.rename(tmp_p, target_p):
+        fs.delete(tmp_p, False)
+        raise IOError(
+            f"commit failed: rename {tmp_p} -> {target_p} "
+            "returned false (filesystem refused the move)"
+        )
+
+
+def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    """Bucket numbers with committed manifest rows, read on the driver.
+    Absence of the manifest means a fresh run (empty set); a manifest that
+    EXISTS but cannot be read raises — treating a transient storage error as
+    "nothing committed" would re-process committed buckets (and, worse, let
+    _check_or_record_params overwrite the recorded partitioning params)."""
+    from sparkdoc.io import read_fs_bytes
+
+    fs, p = _hadoop_fs(spark, manifest_path(out_dir))
+    done: set[int] = set()
+    for f in _visible_files(fs, p, ".parquet"):
+        t = pq.read_table(pa.BufferReader(read_fs_bytes(spark, fs, f)), columns=["bucket"])
+        done.update(t.column("bucket").to_pylist())
+    return done
+
+
+def _manifest_bytes(job_id: str, metrics_rows: list[dict]) -> bytes:
+    """One manifest parquet file holding ``metrics_rows``, serialized in
+    memory, about half the size of the file Spark writes for the same rows:
+    ``store_schema=False`` drops the embedded Arrow schema (~700 bytes a
+    file, repeating the parquet schema), and a handful of rows that every
+    reader reads whole gains nothing from dictionary pages or column
+    statistics."""
+    table = pa.Table.from_pylist(
+        [
+            {
+                "job_id": job_id,
+                "bucket": int(m["bucket"]),
+                "n_docs": int(m["n_docs"]),
+                "n_spans": int(m["n_spans"]),
+                "n_chunks": int(m.get("n_chunks", 0)),
+                "wall_ms": int(m["wall_ms"]),
+                "commit_seq": int(m["commit_seq"]),
+                "fmt_counts": m.get("fmt_counts", ""),
+            }
+            for m in metrics_rows
+        ],
+        schema=_MANIFEST_ARROW,
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, store_schema=False, use_dictionary=False, write_statistics=False)
+    return sink.getvalue().to_pybytes()
 
 
 def commit_bucket_group(
@@ -64,95 +153,95 @@ def commit_bucket_group(
     job_id: str,
     metrics_rows: list[dict],
 ) -> None:
-    """Append manifest rows atomically: write to a temp dir, then RENAME the
-    parquet files into the manifest dir through the Hadoop FileSystem API
-    (atomic on POSIX and HDFS; on S3 the rename is copy+delete but the
-    manifest stays consistent because readers key on whole files)."""
-    path = manifest_path(out_dir)
-    tmp = os.path.join(out_dir, f"_manifest_tmp_{uuid.uuid4().hex}")
-    df = spark.createDataFrame(
-        [
-            (
-                job_id,
-                int(m["bucket"]),
-                int(m["n_docs"]),
-                int(m["n_spans"]),
-                int(m.get("n_chunks", 0)),
-                int(m["wall_ms"]),
-                int(m["commit_seq"]),
-                m.get("fmt_counts", ""),
-            )
-            for m in metrics_rows
-        ],
-        METRICS,
+    """Append manifest rows atomically: one parquet file written to a temp
+    file in ``out_dir``, then RENAMED into the manifest dir through the
+    Hadoop FileSystem API. No Spark job."""
+    fs, manifest_p = _hadoop_fs(spark, manifest_path(out_dir))
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = uuid.uuid4().hex
+    _commit_file(
+        fs,
+        _manifest_bytes(job_id, metrics_rows),
+        Path(manifest_p.getParent(), f"_manifest_tmp_{name}"),
+        Path(manifest_p, f"{name}.parquet"),
     )
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs, manifest_p = _hadoop_fs(spark, path)
-    fs.mkdirs(manifest_p)
-    tmp_p = jvm_path(tmp)
-    for status in fs.listStatus(tmp_p):
-        name = status.getPath().getName()
-        if name.endswith(".parquet"):
-            target = jvm_path(manifest_p, f"{uuid.uuid4().hex}.parquet")
-            # Hadoop rename reports failure by RETURNING FALSE, not raising —
-            # swallowing it would mark the commit done while the manifest row
-            # is lost (resume would recompute a bucket the summary claimed
-            # committed, and the ledger accounting would be silently wrong)
-            if not fs.rename(status.getPath(), target):
-                raise IOError(
-                    f"manifest commit failed: rename {status.getPath()} -> {target} "
-                    "returned false (filesystem refused the move)"
-                )
-    fs.delete(tmp_p, True)
 
 
 def _params_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_run_params")
 
 
+def _params_records(text: str, where: str) -> list[dict]:
+    """The param records of one ``_run_params`` file, JSON lines (one line
+    here, one per row from Spark's JSON writer). Anything else is
+    unreadable."""
+    try:
+        recs = [json.loads(line) for line in text.splitlines() if line.strip()]
+    except ValueError:
+        recs = None
+    if recs is None or not all(isinstance(r, dict) for r in recs):
+        raise ValueError(
+            f"run_resumable: {where} is unreadable ({text[:200]!r}) — refusing "
+            "to resume with unverifiable partitioning params; restore the "
+            "file or use a fresh out_dir"
+        )
+    return recs
+
+
 def _check_or_record_params(spark: SparkSession, out_dir: str, **params) -> None:
     """Resume safety: completed_buckets keys on bucket NUMBER, so resuming
     with a different n_buckets (renumbers every bucket) or chunk flag
     (committed buckets would permanently lack their chunks) silently loses
-    data. First run records the partitioning params next to the manifest;
-    any later run must match or gets a hard error (fresh out_dir to change
-    them)."""
-    import json as _json
+    data. First run records the partitioning params next to the manifest
+    (one JSON file, temp-file + rename); any later run must match or gets a
+    hard error (fresh out_dir to change them)."""
+    from sparkdoc.io import read_fs_bytes
 
-    from sparkdoc.io import fs_exists
-
+    fs, pdir = _hadoop_fs(spark, _params_path(out_dir))
     # absence = first run; an EXISTING-but-unreadable params file must
     # raise, not silently disable this guard and overwrite the recorded
     # params (a bare except here turned a corrupt file into exactly the
     # n_buckets-renumbering data loss the guard exists to prevent)
-    if fs_exists(spark, _params_path(out_dir)):
-        rows = spark.read.json(_params_path(out_dir)).collect()
-        prior = rows[0].asDict() if rows else None
-        if prior is not None and "_corrupt_record" in prior:
-            raise ValueError(
-                f"run_resumable: {_params_path(out_dir)} is unreadable "
-                f"({prior['_corrupt_record']!r}) — refusing to resume with "
-                "unverifiable partitioning params; restore the file or use "
-                "a fresh out_dir"
-            )
-    else:
-        prior = None
-    if prior is None:
-        spark.createDataFrame([(_json.dumps(params),)], "v string").selectExpr(
-            "from_json(v, 'n_buckets int, chunk boolean') as p"
-        ).select("p.*").coalesce(1).write.mode("overwrite").json(_params_path(out_dir))
-        return
-    mismatched = {
-        k: (prior.get(k), v) for k, v in params.items() if prior.get(k) != v
-    }
-    if mismatched:
-        raise ValueError(
-            "run_resumable params differ from the committed run in "
-            f"{out_dir!r}: {mismatched} — resuming would silently skip or "
-            "lose work (bucket numbers / chunk outputs no longer line up). "
-            "Use the original params or a fresh out_dir."
+    records = [
+        rec
+        for f in _visible_files(fs, pdir, ".json")
+        for rec in _params_records(read_fs_bytes(spark, fs, f).decode("utf-8", "replace"), str(f))
+    ]
+    if not records:
+        Path = spark._jvm.org.apache.hadoop.fs.Path
+        _commit_file(
+            fs,
+            json.dumps(params, sort_keys=True).encode("utf-8"),
+            Path(pdir.getParent(), f"_run_params_tmp_{uuid.uuid4().hex}"),
+            Path(pdir, "params.json"),
         )
+        return
+    for prior in records:
+        mismatched = {
+            k: (prior.get(k), v) for k, v in params.items() if prior.get(k) != v
+        }
+        if mismatched:
+            raise ValueError(
+                "run_resumable params differ from the committed run in "
+                f"{out_dir!r}: {mismatched} — resuming would silently skip or "
+                "lose work (bucket numbers / chunk outputs no longer line up). "
+                "Use the original params or a fresh out_dir."
+            )
+
+
+def _bucket_stats(cells, has_fmt: bool) -> tuple[dict[int, dict], dict[int, str]]:
+    """Fold (bucket[, fmt], n_docs, n_spans) aggregate rows into per-bucket
+    {n_docs, n_spans} and, for mixed/WARC ingests, each bucket's per-format
+    doc counts as a sorted JSON object (the manifest's fmt_counts)."""
+    per_bucket: dict[int, dict] = {}
+    fmt_counts: dict[int, dict[str, int]] = {}
+    for r in cells:
+        s = per_bucket.setdefault(r["bucket"], {"n_docs": 0, "n_spans": 0})
+        s["n_docs"] += r["n_docs"]
+        s["n_spans"] += r["n_spans"] or 0
+        if has_fmt:
+            fmt_counts.setdefault(r["bucket"], {})[r["fmt"]] = r["n_docs"]
+    return per_bucket, {b: json.dumps(dict(sorted(c.items()))) for b, c in fmt_counts.items()}
 
 
 def run_resumable(
@@ -207,14 +296,15 @@ def run_resumable(
     totals = {"docs": 0, "spans": 0, "chunks": 0}
 
     def _prepare(group: list[int]):
-        """Build + CACHE one group's documents (the expensive parse runs at
-        the .count()). Runs on the prefetch thread for group N+1 while the
-        main thread writes/commits group N — compute overlaps commit
-        latency, while all WRITES stay on the main thread in manifest order
-        (two concurrent writes into one parquet root would race in the
-        shared _temporary staging dir, and out-of-order manifests would
-        weaken the resume story; kill/resume semantics are unchanged — a
-        prefetched-but-uncommitted group is simply recomputed)."""
+        """Build + CACHE one group's documents and their per-bucket stats
+        (the expensive parse runs at the stats collect). Runs on the
+        prefetch thread for group N+1 while the main thread writes/commits
+        group N — compute overlaps commit latency, while all WRITES stay on
+        the main thread in manifest order (two concurrent writes into one
+        parquet root would race in the shared _temporary staging dir, and
+        out-of-order manifests would weaken the resume story; kill/resume
+        semantics are unchanged — a prefetched-but-uncommitted group is
+        simply recomputed)."""
         if raw_for_group is not None:
             if documents_fn is None:
                 raise ValueError("raw_for_group requires documents_fn")
@@ -235,9 +325,20 @@ def run_resumable(
             else:
                 docs = extract_documents(part.drop("bucket")).persist()
             docs_b = with_bucket(docs, n_buckets)
+        # ONE aggregation materializes the cache NOW, on this thread, and
+        # serves both the per-bucket doc/span totals and (for mixed/WARC
+        # ingests) the per-format lineage: grouping by (bucket, fmt) and
+        # folding driver-side, the stats come back with the group instead
+        # of costing the main thread one more scan of it per group
+        has_fmt = "fmt" in docs_b.columns
         t_prep = time.monotonic()
-        docs.count()  # materialize the cache NOW, on this thread
-        return docs, docs_b, int((time.monotonic() - t_prep) * 1000)
+        cells = (
+            docs_b.groupBy(*(["bucket", "fmt"] if has_fmt else ["bucket"]))
+            .agg(F.count("*").alias("n_docs"), F.sum(F.size("spans")).alias("n_spans"))
+            .collect()
+        )
+        prep_ms = int((time.monotonic() - t_prep) * 1000)
+        return docs, docs_b, prep_ms, _bucket_stats(cells, has_fmt)
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -246,46 +347,19 @@ def run_resumable(
     try:
         fut = pool.submit(_prepare, groups[0]) if pool else None
         for idx, group in enumerate(groups):
-            t0 = time.monotonic()
-            docs, docs_b, prep_ms = (
+            docs, docs_b, prep_ms, (per_bucket, fmt_by_bucket) = (
                 fut.result() if fut is not None else _prepare(group)
             )
+            # the group's own time starts once its documents are ready:
+            # prep_ms already holds the parse, an earlier start would count
+            # it twice
+            t0 = time.monotonic()
             fut = None
             if pool and idx + 1 < len(groups):
                 fut = pool.submit(_prepare, groups[idx + 1])
             docs_b.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy("bucket").parquet(
                 os.path.join(out_dir, "documents")
             )
-            # ONE aggregation pass serves both the per-bucket doc/span
-            # totals and (for mixed/WARC ingests) the per-format lineage:
-            # grouping by (bucket, fmt) and folding driver-side replaces the
-            # former two separate scans of the cached group (round 6 — each
-            # scan of a 240k-doc group with span arrays cost ~1-2 s)
-            has_fmt = "fmt" in docs_b.columns
-            gcols = ["bucket", "fmt"] if has_fmt else ["bucket"]
-            cells = (
-                docs_b.groupBy(*gcols)
-                .agg(F.count("*").alias("n_docs"), F.sum(F.size("spans")).alias("n_spans"))
-                .collect()
-            )
-            per_bucket: dict[int, dict] = {}
-            fmt_counts_by_bucket: dict[int, dict[str, int]] = {}
-            for r in cells:
-                s = per_bucket.setdefault(
-                    r["bucket"], {"n_docs": 0, "n_spans": 0}
-                )
-                s["n_docs"] += r["n_docs"]
-                s["n_spans"] += r["n_spans"] or 0
-                if has_fmt:
-                    fmt_counts_by_bucket.setdefault(r["bucket"], {})[r["fmt"]] = r["n_docs"]
-            fmt_by_bucket: dict[int, str] = {}
-            if has_fmt:
-                import json as _json
-
-                fmt_by_bucket = {
-                    b: _json.dumps(dict(sorted(c.items())))
-                    for b, c in fmt_counts_by_bucket.items()
-                }
             n_chunks_by_bucket: dict[int, int] = {}
             if chunk:
                 # mixed-format docs carry an extra fmt column; the chunker's
@@ -330,7 +404,7 @@ def run_resumable(
             # wall_ms = the group's own parse (timed INSIDE _prepare — for
             # prefetched groups it overlaps the previous group's commit
             # wall-clock, so the loop timer alone under-reported it as
-            # write-only) + this loop pass's write/commit time
+            # write-only) + this loop pass's write/chunk time
             wall_ms = prep_ms + int((time.monotonic() - t0) * 1000)
             rows = []
             for b in group:
@@ -358,7 +432,7 @@ def run_resumable(
             # job would keep running); consume it and release the cache
             if fut is not None:
                 try:
-                    docs_left, _, _ = fut.result()
+                    docs_left = fut.result()[0]
                     docs_left.unpersist()
                 except Exception:
                     pass

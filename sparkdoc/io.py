@@ -61,14 +61,33 @@ def _text_fs(fs):
         return fs
 
 
+def write_fs_bytes(fs, p, data: bytes) -> None:
+    """Overwrite file ``p`` of filesystem ``fs`` with ``data`` (parents
+    created by Hadoop create())."""
+    stream = fs.create(p, True)
+    try:
+        stream.write(bytearray(data))
+    finally:
+        stream.close()
+
+
+def read_fs_bytes(spark: SparkSession, fs, p) -> bytes:
+    """The whole of file ``p`` of filesystem ``fs``, copied on the JVM side
+    into one byte array (one py4j transfer, not one per buffer)."""
+    jvm = spark._jvm
+    stream = fs.open(p)
+    try:
+        sink = jvm.java.io.ByteArrayOutputStream()
+        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 65536, False)
+        return bytes(sink.toByteArray())
+    finally:
+        stream.close()
+
+
 def write_text_file(spark: SparkSession, path_str: str, text: str) -> None:
     """Overwrite a small text artifact at ``path_str`` (parents created)."""
     fs, p = hadoop_fs(spark, path_str)
-    stream = _text_fs(fs).create(p, True)  # Hadoop create() mkdirs the parents
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
+    write_fs_bytes(_text_fs(fs), p, text.encode("utf-8"))
 
 
 def read_text_file(spark: SparkSession, path_str: str) -> str | None:
@@ -76,14 +95,7 @@ def read_text_file(spark: SparkSession, path_str: str) -> str | None:
     fs, p = hadoop_fs(spark, path_str)
     if not fs.exists(p):
         return None
-    jvm = spark._jvm
-    stream = _text_fs(fs).open(p)
-    try:
-        sink = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 65536, False)
-        return bytes(sink.toByteArray()).decode("utf-8")
-    finally:
-        stream.close()
+    return read_fs_bytes(spark, _text_fs(fs), p).decode("utf-8")
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

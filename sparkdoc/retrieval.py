@@ -320,13 +320,18 @@ def _score_sets(cpd: DataFrame, qs: _QuerySets, k: int) -> DataFrame:
         import pyarrow.compute as pc
 
         term_arr = pa.array(terms, type=pa.string())
-        ids_parts, tidx_parts, c_parts = [], [], []
+        ids_parts, valid_parts, tidx_parts, c_parts = [], [], [], []
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             tidx = pc.index_in(batch.column(0), value_set=term_arr)
+            # fill null ids BEFORE to_numpy (a null forces a float64 array
+            # that astype turns into INT64_MIN, a made-up doc id); the valid
+            # mask keeps them apart, as similarity._corpus_rows does
+            ids = batch.column(1)
+            valid_parts.append(np.asarray(ids.is_valid()))
             ids_parts.append(
-                batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+                ids.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
             )
             tidx_parts.append(tidx.to_numpy(zero_copy_only=False))
             c_parts.append(
@@ -335,16 +340,26 @@ def _score_sets(cpd: DataFrame, qs: _QuerySets, k: int) -> DataFrame:
         out_s = np.empty(0, dtype=np.int64)
         out_d = np.empty(0, dtype=np.int64)
         out_c = np.empty(0, dtype=np.int64)
+        out_null = np.empty(0, dtype=bool)
         if ids_parts:
             ids = np.concatenate(ids_parts)
+            valid = np.concatenate(valid_parts)
             tidx = np.concatenate(tidx_parts)
             c = np.concatenate(c_parts)
             # terms outside the probed set cannot occur (cpd is built from
             # the probed postings), but a null index would poison the
             # scatter — drop defensively (index_in nulls surface as NaN)
             ok = ~np.isnan(tidx.astype(np.float64))
-            ids, tidx, c = ids[ok], tidx[ok].astype(np.int64), c[ok]
-            docs_u, rows = np.unique(ids, return_inverse=True)
+            ids, valid, tidx, c = ids[ok], valid[ok], tidx[ok].astype(np.int64), c[ok]
+            # null ids are ONE doc key, as in the SQL path's groupBy(set_id,
+            # doc_id); it takes row 0, so row order IS the window's doc
+            # order (ascending, NULLS FIRST)
+            has_null = int(not valid.all())
+            docs_u, inv = np.unique(ids[valid], return_inverse=True)
+            rows = np.zeros(len(ids), dtype=np.int64)
+            rows[valid] = inv + has_null
+            docs_u = np.r_[np.zeros(has_null, dtype=np.int64), docs_u]
+            doc_null = np.arange(len(docs_u)) < has_null
             C = np.zeros((len(docs_u), len(terms)), dtype=np.int64)
             P = np.zeros((len(docs_u), len(terms)), dtype=np.int64)
             np.add.at(C, (rows, tidx), c)
@@ -355,7 +370,7 @@ def _score_sets(cpd: DataFrame, qs: _QuerySets, k: int) -> DataFrame:
             if len(di):
                 # per-set partial top-k, exact window comparator: group by
                 # set, then score desc, then doc asc (all int64 compares)
-                order = np.lexsort((docs_u[di], -S[di, si], si))
+                order = np.lexsort((di, -S[di, si], si))
                 si_o, di_o = si[order], di[order]
                 starts = np.flatnonzero(
                     np.r_[True, si_o[1:] != si_o[:-1]]
@@ -366,11 +381,12 @@ def _score_sets(cpd: DataFrame, qs: _QuerySets, k: int) -> DataFrame:
                 keep = ranks < kk
                 out_s = set_id_np[si_o[keep]]
                 out_d = docs_u[di_o[keep]]
+                out_null = doc_null[di_o[keep]]
                 out_c = S[di_o[keep], si_o[keep]]
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(out_s, type=pa.int64()),
-                pa.array(out_d, type=pa.int64()),
+                pa.array(out_d, type=pa.int64(), mask=out_null),
                 pa.array(out_c, type=pa.int64()),
             ],
             names=["set_id", "doc_id", "score_e6"],

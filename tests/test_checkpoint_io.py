@@ -274,3 +274,173 @@ def test_corrupt_run_params_refuses_resume(spark, tmp_path):
                 fh.write("{ not json")
     with pytest.raises(Exception, match="unreadable|corrupt|_corrupt"):
         _check_or_record_params(spark, out, n_buckets=8, chunk=True)
+
+
+# --- the driver-side commit log ------------------------------------------------
+
+_LOG_ROWS = [
+    {"bucket": 0, "n_docs": 3, "n_spans": 17, "n_chunks": 4, "wall_ms": 120,
+     "commit_seq": 0, "fmt_counts": ""},
+    {"bucket": 1, "n_docs": 0, "n_spans": 0, "n_chunks": 0, "wall_ms": 120,
+     "commit_seq": 0, "fmt_counts": '{"html": 2, "pdf": 1}'},
+]
+
+
+def _listing(path):
+    return {
+        os.path.join(root, f): (os.path.getsize(os.path.join(root, f)),
+                                os.stat(os.path.join(root, f)).st_mtime_ns)
+        for root, _d, files in os.walk(path) for f in files
+    }
+
+
+def test_commit_log_starts_no_spark_job(spark, tmp_path):
+    """Manifest append, params record/check and the resume read are
+    driver-side FileSystem calls: none of them starts a Spark job."""
+    import time
+    import uuid
+
+    from sparkdoc.checkpoint import (
+        _check_or_record_params,
+        commit_bucket_group,
+        completed_buckets,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, sentinel = (f"commit-log-{uuid.uuid4().hex}" for _ in range(2))
+    out = str(tmp_path / "log")
+    try:
+        sc.setJobGroup(group, "commit log")
+        _check_or_record_params(spark, out, n_buckets=4, chunk=True)  # record
+        _check_or_record_params(spark, out, n_buckets=4, chunk=True)  # check
+        assert completed_buckets(spark, out) == set()
+        commit_bucket_group(spark, out, "job-a", _LOG_ROWS)
+        assert completed_buckets(spark, out) == {0, 1}
+        # job events reach the status tracker asynchronously but in order:
+        # once a later job under another group is visible, any job the
+        # calls above started would be too
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(3).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup(sentinel)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_spark_written_commit_log_still_resumes(spark, tmp_path):
+    """An output dir whose manifest and run params were written by Spark
+    (part files with .crc sidecars and _SUCCESS, a JSON part-*.json) resumes:
+    every bucket skipped, no file changed, changed params still refused."""
+    import shutil
+
+    from sparkdoc.checkpoint import _params_path, manifest_path, run_resumable
+    from sparkdoc.schemas import METRICS
+    from sparkdoc.synth import raw_nodes_df
+
+    out = str(tmp_path / "spark_log")
+    raw = raw_nodes_df(spark, 24, 5, partitions=2)
+    run_resumable(spark, raw, out, n_buckets=4, group_size=2)
+    man, pdir = manifest_path(out), _params_path(out)
+    rows = spark.read.schema(METRICS).parquet(man).collect()
+    assert len(rows) == 4
+    shutil.rmtree(man)
+    shutil.rmtree(pdir)
+    spark.createDataFrame(rows, METRICS).coalesce(1).write.parquet(man)
+    spark.createDataFrame([(4, True)], "n_buckets int, chunk boolean").coalesce(1).write.json(pdir)
+    assert any(f.endswith(".parquet.crc") for f in os.listdir(man))
+    assert any(f.startswith("part-") and f.endswith(".json") for f in os.listdir(pdir))
+    assert "_SUCCESS" in os.listdir(pdir)
+
+    before = _listing(out)
+    r = run_resumable(spark, raw, out, n_buckets=4, group_size=2)
+    assert r["buckets_processed"] == [] and sorted(r["buckets_skipped"]) == [0, 1, 2, 3]
+    assert _listing(out) == before
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_resumable(spark, raw, out, n_buckets=8, group_size=2)
+    assert _listing(out) == before
+
+
+def test_driver_written_manifest_reads_back_through_spark(spark, tmp_path):
+    """A driver-written manifest file is plain parquet: it reads back equal
+    through the explicit-schema and the schema-less Spark reads, and it is
+    no larger than the file Spark writes for the same rows."""
+    from sparkdoc.checkpoint import commit_bucket_group, manifest_path
+    from sparkdoc.schemas import METRICS
+
+    out = str(tmp_path / "readback")
+    commit_bucket_group(spark, out, "job-c", _LOG_ROWS)
+    man = manifest_path(out)
+    files = os.listdir(man)
+    assert len(files) == 1 and files[0].endswith(".parquet")  # no sidecar, no temp
+
+    names = [f.name for f in METRICS]
+    want = sorted(tuple({"job_id": "job-c", **r}[n] for n in names) for r in _LOG_ROWS)
+    for df in (spark.read.schema(METRICS).parquet(man), spark.read.parquet(man)):
+        assert [(f.name, f.dataType) for f in df.schema] == [(f.name, f.dataType) for f in METRICS]
+        assert sorted(map(tuple, df.collect())) == want
+
+    ref = str(tmp_path / "spark_written")
+    spark.createDataFrame([tuple(w) for w in want], METRICS).coalesce(1).write.parquet(ref)
+    (spark_part,) = [f for f in os.listdir(ref) if f.endswith(".parquet")]
+    assert os.path.getsize(os.path.join(man, files[0])) <= os.path.getsize(os.path.join(ref, spark_part))
+
+
+class _RefusingRename:
+    """A Hadoop FileSystem whose rename reports failure the Hadoop way: by
+    returning false."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        return False
+
+
+def test_refused_rename_raises_and_commits_nothing(spark, tmp_path, monkeypatch):
+    """A rename that returns false must raise IOError — for the manifest and
+    for the run params — and leave no file in the target dir (the temp file
+    lives outside it and is removed)."""
+    from sparkdoc import checkpoint
+
+    real = checkpoint._hadoop_fs
+
+    def refusing(spark_, path_str):
+        fs, p = real(spark_, path_str)
+        return _RefusingRename(fs), p
+
+    monkeypatch.setattr(checkpoint, "_hadoop_fs", refusing)
+    out = str(tmp_path / "refused")
+    with pytest.raises(IOError, match="returned false"):
+        checkpoint.commit_bucket_group(spark, out, "job-d", _LOG_ROWS)
+    with pytest.raises(IOError, match="returned false"):
+        checkpoint._check_or_record_params(spark, out, n_buckets=4, chunk=True)
+    assert _listing(out) == {}  # nothing under _manifest/ or _run_params/, no temp
+    monkeypatch.undo()
+    assert checkpoint.completed_buckets(spark, out) == set()
+
+
+def test_single_group_wall_ms_within_call(spark, tmp_path):
+    """A group's manifest wall_ms counts its parse once: for a single-group
+    run (no prefetch pool) it cannot exceed the call's own wall time."""
+    import time
+
+    from sparkdoc.checkpoint import manifest_path, run_resumable
+    from sparkdoc.schemas import METRICS
+    from sparkdoc.synth import raw_nodes_df
+
+    out = str(tmp_path / "wall")
+    raw = raw_nodes_df(spark, 40, 3, partitions=2)
+    t0 = time.monotonic()
+    run_resumable(spark, raw, out, n_buckets=4, group_size=4)
+    call_ms = (time.monotonic() - t0) * 1000
+    walls = {r["wall_ms"] for r in spark.read.schema(METRICS).parquet(manifest_path(out)).collect()}
+    assert len(walls) == 1
+    assert 0 < walls.pop() <= call_ms

@@ -28,6 +28,8 @@ def _rank(df, k):
     w = Window.partitionBy("set_id").orderBy(
         F.col("score_e6").desc(), F.col("doc_id").asc()
     )
+    # (set_id, rank) is unique per row; sorting on it never compares a
+    # null doc_id with an int
     return sorted(
         map(
             tuple,
@@ -35,7 +37,8 @@ def _rank(df, k):
             .filter(F.col("rank") <= k)
             .select("set_id", "doc_id", "rank", "score_e6")
             .collect(),
-        )
+        ),
+        key=lambda r: (r[0], r[2]),
     )
 
 
@@ -108,3 +111,46 @@ def test_bm25_topk_invariant_to_kernel_path(spark):
     r1 = [(d, r, s) for (qq, d, r, s) in kernel_rows if qq == 1]
     r11 = [(d, r, s) for (qq, d, r, s) in kernel_rows if qq == 11]
     assert r1 == r11 and len(r1) > 0
+
+
+def test_kernel_matches_sql_with_null_doc_ids(spark):
+    """A null doc_id is one doc key in the SQL path's groupBy(set_id,
+    doc_id): the kernel must report it as null (never a made-up INT64_MIN
+    id) and rank it the same way (doc_id ascending puts nulls first)."""
+    rows = CPD + [("a", None, 100), ("b", None, 30), ("c", None, 7)]
+    cpd = spark.createDataFrame(rows, "term string, doc_id long, c_e6 long").repartition(
+        "doc_id"
+    )
+    qs = _QuerySets(
+        sorted({t for _, t in SETS}),
+        list(SETS),
+        [(s, s) for s in sorted({s for s, _ in SETS})],
+        "bigint",
+    )
+    for k in (1, 2, 10):
+        got = _rank(_score_sets(cpd, qs, k), k)
+        want = _rank(_score_sets_sql(cpd, qs), k)
+        assert got == want, f"k={k}"
+    full = {(s, d): c for s, d, _, c in _rank(_score_sets(cpd, qs, 10), 10)}
+    assert full[(10, None)] == 130 and full[(20, None)] == 30
+    # a tie with doc 4 on set 40: the null id ranks first, as in the window
+    assert _rank(_score_sets(cpd, qs, 1), 1)[-1] == (40, None, 1, 7)
+    assert all(d is None or d >= 0 for _, d in full)
+
+
+def test_bm25_topk_null_doc_id_invariant_to_kernel_path(spark):
+    docs = spark.createDataFrame(
+        [(1, "cat sat"), (None, "cat cat sat"), (2, "dog"), (None, "dog dog")],
+        "doc_id long, text string",
+    ).repartition(2)
+    q = spark.createDataFrame([(1, "cat sat"), (2, "dog")], "query_id long, text string")
+    key = lambda r: (r[0], r[2])  # noqa: E731 — (query_id, rank) is unique
+    kernel_rows = sorted(map(tuple, bm25_topk(docs, q, k=3).collect()), key=key)
+    docs_i = docs.select(F.col("doc_id").cast("int").alias("doc_id"), "text")
+    sql_rows = sorted(
+        ((a, None if b is None else int(b), c, d)
+         for a, b, c, d in bm25_topk(docs_i, q, k=3).collect()),
+        key=key,
+    )
+    assert kernel_rows == sql_rows
+    assert any(d is None for _, d, _, _ in kernel_rows)
